@@ -112,31 +112,42 @@ def main() -> None:
             w = w.trigger(processingTime=trigger.removeprefix("processing-time:"))
         return w
 
-    # T8 multi-query fan-out off the shared source, reference's three tables
-    queries = [
-        writer(hourly_metrics_stream(events), "append", "hourly")
-        .format("parquet")
-        .option("path", os.path.join(out, "hourly_metrics"))
-        .start(),
-        writer(session_window_metrics_stream(events), "append", "sessions")
-        .format("parquet")
-        .option("path", os.path.join(out, "session_metrics"))
-        .start(),
+    # T8 multi-query fan-out off the shared source, reference's three
+    # tables. Every started query is stopped on the way out, so a failure
+    # in one (or in a later start) never leaves the others running.
+    queries = []
+    try:
+        queries.append(
+            writer(hourly_metrics_stream(events), "append", "hourly")
+            .format("parquet")
+            .option("path", os.path.join(out, "hourly_metrics"))
+            .start()
+        )
+        queries.append(
+            writer(session_window_metrics_stream(events), "append", "sessions")
+            .format("parquet")
+            .option("path", os.path.join(out, "session_metrics"))
+            .start()
+        )
         # complete-mode KPIs snapshot-overwrite per batch (S6), the
         # reference's dashboard upsert-of-one-row equivalent
-        writer(dashboard_metrics_stream(events), "complete", "dashboard")
-        .foreachBatch(
-            lambda df, _bid: overwrite_snapshot(
-                df, os.path.join(out, "dashboard_metrics")
+        queries.append(
+            writer(dashboard_metrics_stream(events), "complete", "dashboard")
+            .foreachBatch(
+                lambda df, _bid: overwrite_snapshot(
+                    df, os.path.join(out, "dashboard_metrics")
+                )
             )
+            .start()
         )
-        .start(),
-    ]
-    if trigger == "available-now":
+        if trigger == "available-now":
+            for q in queries:
+                q.awaitTermination()
+        else:  # pragma: no cover - continuous mode
+            spark.streams.awaitAnyTermination()
+    finally:
         for q in queries:
-            q.awaitTermination()
-    else:  # pragma: no cover - continuous mode
-        spark.streams.awaitAnyTermination()
+            q.stop()
     print(json.dumps({"processor": "done", "source": source, "output": out}))
 
 

@@ -7,6 +7,17 @@ UTC session timezone, Arrow transfer for the Python boundary, AQE skew-join
 handling, and a shuffle-partition count sized to the local core count
 instead of the 200 default (on a real cluster this would be tuned to
 ~2-3x total executor cores, or left to AQE coalescing).
+
+Why the core count and not more: the streaming processor's stateful
+queries (hourly windows, session windows, dashboard KPIs) open, commit
+and reload one state store per shuffle partition on EVERY micro-batch,
+and AQE cannot coalesce a stateful shuffle. Partitions beyond the cores
+add store lifecycle to each trigger without adding parallelism, and that
+fixed per-trigger cost is what sets the freshness of the live tables
+(Structured Streaming, SIGMOD 2018). Batch plans are not affected: AQE
+coalescing resizes their shuffles at runtime. A checkpoint keeps the
+partition count it was created with, so a restart over an older
+checkpoint runs at its original count.
 """
 
 from __future__ import annotations
@@ -23,23 +34,42 @@ def _cpus() -> int:
         return os.cpu_count() or 8
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else 3/4 of
+    physical memory capped at 16g, so the JVM never reserves more than the
+    host has."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 << 10, phys * 3 // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "e_commerce_click_stream_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.
+    """Build the session, or return the live one untouched.
 
     In local mode the driver JVM is the whole cluster, so
     ``spark.driver.memory`` is the only memory knob; it must be set before
     the JVM starts, hence here rather than at runtime.
+
+    ``getOrCreate`` would re-apply every builder setting below to an
+    existing session, silently resetting runtime settings its owner chose
+    (a test session's shuffle-partition count, say). A caller that runs
+    inside a live session therefore gets it as it is; a stopped session is
+    not active, so the next call builds a fresh one.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = _cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # -- parallelism ---------------------------------------------------
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cpus, 16)))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.default.parallelism", str(cpus))
         # -- adaptive execution (reference X1/X2 + skew handling) ----------
         .config("spark.sql.adaptive.enabled", "true")
@@ -57,7 +87,7 @@ def get_spark(
         # to what DuckDB's oracle sees, so value hashes are unchanged.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # -- local-mode ergonomics -------------------------------------------
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # At 100 TB the scan parallelism is governed by this: 128 MB splits.

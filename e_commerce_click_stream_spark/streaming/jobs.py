@@ -95,11 +95,9 @@ def _note_replay_size(spark: SparkSession, nbytes: int) -> None:
 
 def _replay_parts(spark: SparkSession) -> str:
     """Partition count the runners clamp to: the size-derived value when a
-    replay reader recorded one, else the historical 32."""
-    try:
-        return spark.conf.get(_REPLAY_PARTS_KEY)
-    except Exception:
-        return "32"
+    replay reader recorded one, else the session's own configured shuffle
+    parallelism (never more state stores than the session was sized for)."""
+    return spark.conf.get(_REPLAY_PARTS_KEY, spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,7 +595,7 @@ def _run_foreach_batch(stream: DataFrame, merge, timeout_s: int = 300) -> str:
     ok = False
     try:
         # clamp inside the try: a start-time failure must not leave the
-        # session's shuffle parallelism stuck at 32
+        # session's shuffle parallelism stuck at the clamp
         spark.conf.set("spark.sql.shuffle.partitions", _replay_parts(spark))
         q = (
             stream.writeStream.foreachBatch(merge)
@@ -878,13 +876,13 @@ def arrival_order_replay(spark: SparkSession, df: DataFrame, batch_col: str):
             "staged mtimes not strictly increasing — filesystem timestamp "
             f"granularity broke the replay order contract: {stored[:8]}..."
         )
-    # r15 session 2: this staged reader was the one replay entry point
-    # that never recorded its input size, so downstream runners fell back
-    # to the historical 32 state partitions — at one state-store
-    # open/commit/reload per partition PER MICRO-BATCH, the ordered
-    # replays (50+ triggers at sf0.1) paid ~8× the store lifecycle the
-    # size-derived count needs. Same derivation as _chunked_replay;
-    # partition count never changes any aggregate's values.
+    # Record the input size like every other replay entry point, so the
+    # runners clamp to the size-derived count instead of the session's
+    # full shuffle parallelism — at one state-store open/commit/reload per
+    # partition PER MICRO-BATCH, the ordered replays (50+ triggers at
+    # sf0.1) would otherwise pay for stores the input does not need. Same
+    # derivation as _chunked_replay; partition count never changes any
+    # aggregate's values.
     _note_replay_size(spark, sum(os.path.getsize(p) for p in staged))
     schema = df.drop(batch_col).schema
     stream = (

@@ -16,11 +16,14 @@ def spark():
     from e_commerce_click_stream_spark.session import get_spark
 
     spark = get_spark(app_name="tests")
-    # test-session-only: ~2050 tests run tiny fixtures through a shared
-    # local[32] session; 32-way shuffles cost task-scheduling overhead
-    # per stage that dominates at this data size (the suite must fit the
-    # external verification window). AQE still coalesces; engine/bench
-    # sessions are untouched (session.py defaults unchanged).
+    # test-session-only: ~2050 tests run tiny fixtures through one shared
+    # local[SPARK_GRAFT_CPUS] session. Pin the shuffle-partition count so
+    # partition-dependent behaviour (empty partitions, bucket fan-out) is
+    # the same on every host rather than following get_spark's core-count
+    # default; 8 keeps per-stage task scheduling small at this data size
+    # (the suite must fit its verification window). AQE still coalesces.
+    # get_spark() returns a live session untouched, so the CLI tests'
+    # processor/producer entry points do not reset this pin.
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield spark
 

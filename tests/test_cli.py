@@ -8,7 +8,11 @@ import os
 import tempfile
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
+
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -96,3 +100,41 @@ def test_processor_single_file_fixture_replay(spark, monkeypatch):
     dash = spark.read.parquet(os.path.join(out, "dashboard_metrics")).collect()
     n_events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
     assert len(dash) == 1 and dash[0].total_events == n_events
+
+
+def _sessions_path_is_a_file(out, monkeypatch):
+    # the sessions sink cannot create its directory: its start() raises
+    # while the hourly query is already running
+    (out / "session_metrics").write_text("not a directory")
+    return Py4JJavaError
+
+
+def _hourly_batch_fails(out, monkeypatch):
+    # the hourly query dies in its first micro-batch while the sessions and
+    # dashboard queries run on
+    from e_commerce_click_stream_spark import processor
+
+    real = processor.hourly_metrics_stream
+    monkeypatch.setattr(
+        processor,
+        "hourly_metrics_stream",
+        lambda ev: real(ev.filter(F.raise_error(F.lit("boom")).isNull())),
+    )
+    return StreamingQueryException
+
+
+@pytest.mark.parametrize("break_one", [_sessions_path_is_a_file, _hourly_batch_fails])
+def test_processor_stops_every_query_when_one_fails(spark, monkeypatch, tmp_path, break_one):
+    """Available-now mode: when one query fails, main re-raises only after
+    stopping every query it started, so none outlives the processor."""
+    from e_commerce_click_stream_spark import processor
+
+    out = tmp_path / "out"
+    out.mkdir()
+    expected = break_one(out, monkeypatch)
+    monkeypatch.setenv("CLICKSTREAM_SOURCE", os.path.join(SF_SMOKE, "events.parquet"))
+    monkeypatch.setenv("CLICKSTREAM_OUTPUT", str(out))
+    monkeypatch.setenv("CLICKSTREAM_TRIGGER", "available-now")
+    with pytest.raises(expected):
+        processor.main()
+    assert spark.streams.active == []

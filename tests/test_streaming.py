@@ -3,6 +3,8 @@ Kafka payload shaping (S8), trigger/output-mode surface (T4/T5)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from e_commerce_click_stream_spark.streaming.jobs import (
@@ -165,3 +167,99 @@ def test_initial_watermark_drops_pre_epoch_rows(spark, tmp_path):
         "initial-watermark semantics changed — re-derive the epoch floor "
         f"in the streaming oracles (got {got})"
     )
+
+
+def test_replay_parts_falls_back_to_session_parallelism(spark):
+    """With no replay size recorded, the runners clamp to the session's
+    own shuffle parallelism, never to a fixed count above it."""
+    from e_commerce_click_stream_spark.streaming.jobs import (
+        _REPLAY_PARTS_KEY,
+        _replay_parts,
+    )
+
+    prev = spark.conf.get(_REPLAY_PARTS_KEY, None)
+    spark.conf.unset(_REPLAY_PARTS_KEY)
+    try:
+        assert _replay_parts(spark) == spark.conf.get("spark.sql.shuffle.partitions")
+    finally:
+        if prev is not None:
+            spark.conf.set(_REPLAY_PARTS_KEY, prev)
+
+
+def test_hourly_restart_over_16_partition_checkpoint(spark, tmp_path):
+    """A checkpoint keeps the state-partition count it was created with.
+    Start the hourly query at 16 shuffle partitions, restart it over the
+    same checkpoint at the core-count default, and check the state carried
+    across (one window spans both runs) still yields exact closed
+    windows."""
+    import duckdb
+    import pandas as pd
+
+    from e_commerce_click_stream_spark.session import _cpus
+    from e_commerce_click_stream_spark.streaming.jobs import hourly_metrics_stream
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    kinds = ["view", "click", "view", "purchase"]
+
+    def land(name, start, n):
+        # one event every 5 minutes from `start`; naive UTC micros like the
+        # fixtures
+        ts = pd.date_range(start, periods=n, freq="5min").astype("datetime64[us]")
+        pd.DataFrame(
+            {
+                "ts": ts,
+                "user_id": [i % 7 for i in range(n)],
+                "event_type": [kinds[i % 4] for i in range(n)],
+                "value": [round(1.25 * i, 2) for i in range(n)],
+            }
+        ).to_parquet(os.path.join(src, name), index=False)
+
+    def run(parts):
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        try:
+            events = spark.readStream.schema(
+                "ts timestamp, user_id bigint, event_type string, value double"
+            ).parquet(src)
+            q = (
+                hourly_metrics_stream(events)
+                .writeStream.format("parquet")
+                .outputMode("append")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                assert q.awaitTermination(120), "replay did not finish in 120s"
+            finally:
+                q.stop()
+            return q.recentProgress
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    land("a.parquet", "2024-01-01 00:05", 18)  # 00:05 .. 01:30
+    run("16")
+    land("b.parquet", "2024-01-01 01:40", 40)  # 01:40 .. 04:55, hour 01 spans both
+    progress = run(str(_cpus()))
+
+    parts = {op["numShufflePartitions"] for p in progress for op in p["stateOperators"]}
+    assert parts == {16}
+    cols = ["hour_timestamp", "total_events", "page_views", "cart_additions", "purchases", "revenue"]
+    got = sorted(tuple(r) for r in spark.read.parquet(out).select(cols).collect())
+    # the final watermark (04:55 - 10 min) has closed every hour before 04:00
+    want = duckdb.sql(
+        f"""
+        SELECT date_trunc('hour', ts), count(*),
+               sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END),
+               sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END),
+               sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END),
+               round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0 END), 2)
+        FROM '{src}/*.parquet'
+        WHERE ts < TIMESTAMP '2024-01-01 04:00:00'
+        GROUP BY 1 ORDER BY 1
+        """
+    ).fetchall()
+    assert [r[0] for r in got] == [r[0] for r in want]
+    assert got == [tuple(r) for r in want]
