@@ -1,47 +1,15 @@
-"""Benchmark harness: times the headline queries end-to-end.
-
-Runs every ``headline=True`` QuerySpec at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line: {"metric", "value" (total seconds), "unit", "queries" (per-query
-seconds), "sf"}.
-
-Execution is forced with the noop sink so timings cover the full physical
-plan (scan → shuffle → agg) without driver-side collection overhead.
-"""
+"""Host-load and block-manager helpers that perfbench imports (``from bench import ...``)."""
 
 from __future__ import annotations
 
-import json
 import os
-import statistics
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from e_commerce_click_stream_spark.plans.registry import all_specs
-from e_commerce_click_stream_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _sf_from_dir(path: str) -> float:
-    name = os.path.basename(path.rstrip("/"))
-    try:
-        return float(name.removeprefix("sf"))
-    except ValueError:
-        return -1.0
-
-
-def _execute(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _cpu_ticks() -> tuple[int, int, int] | None:
     """(idle+iowait, steal, total) jiffies from the aggregate /proc/stat
     line. steal (field 8) is time the hypervisor ran OTHER tenants while
-    this VM wanted the CPU — the direct noisy-neighbor signal behind
-    three rounds of uniform bench drift that loadavg could never show."""
+    this VM wanted the CPU — the direct noisy-neighbor signal that
+    loadavg cannot show."""
     try:
         with open("/proc/stat") as f:
             vals = [int(x) for x in f.readline().split()[1:]]
@@ -55,13 +23,11 @@ def _cpu_ticks() -> tuple[int, int, int] | None:
 
 
 def _host_load(t0_ticks: tuple[int, int, int] | None) -> dict:
-    """Machine-readable host-pressure stamp (VERDICT r10 #6): loadavg at
-    bench end plus the CPU idle fraction OVER THE BENCH WINDOW (delta of
-    /proc/stat between sweep start and end), so a noisy-neighbor-skewed
-    run is visible in the artifact itself instead of a prose note. On a
-    quiet 32-way host a bench that keeps ~8 cores busy reads
-    idle_frac ≈ 0.75; phantom load shows as idle_frac far below what
-    loadavg's own arithmetic implies."""
+    """Machine-readable host-pressure stamp: loadavg at the end of the
+    measured window plus the CPU idle and steal fractions OVER that window
+    (delta of /proc/stat since ``t0_ticks``), so a run skewed by noisy
+    neighbors is visible in its own output. Phantom load shows as
+    idle_frac far below what loadavg's own arithmetic implies."""
     info: dict = {}
     try:
         la1, la5, la15 = os.getloadavg()
@@ -81,112 +47,6 @@ def _host_load(t0_ticks: tuple[int, int, int] | None) -> dict:
     return info
 
 
-# --- in-sweep calibration (VERDICT r11 #2) -------------------------------
-# Three of four rounds burned forensics separating host drift (hypervisor
-# steal, noisy neighbors) from plan regressions. The stamps above DESCRIBE
-# pressure; these frozen probes CANCEL it: every sweep times a fixed
-# Spark computation (range -> hash shuffle -> agg, no fixture dependence)
-# and a fixed single-threaded DuckDB aggregate, and each headline time is
-# also emitted as a RATIO to the Spark calibrator. A uniformly slow host
-# scales probe and queries alike, so ratios stay comparable across rounds
-# where raw seconds move (pinned by tests/test_bench_calibration.py's
-# synthetic slow-host A/B). NEVER retune these constants without bumping
-# CAL_VERSION — cross-round ratio comparisons are only valid per version.
-CAL_VERSION = 1
-CAL_SPARK_ROWS = 32_000_000
-CAL_GROUP_MOD = 1_000_003
-CAL_DUCK_ROWS = 8_000_000
-# streaming calibrator: micro-batch COUNT of the frozen no-op stream —
-# its time is almost pure scheduler fixed cost, the component that
-# swings ~3x with host load while batch compute holds (VERDICT r14 #3:
-# streaming_hourly_metrics ratio read 0.59 -> 1.57 -> 0.73 across three
-# sweeps of unchanged code). Adding a probe does NOT bump CAL_VERSION:
-# queries_ratio stays defined against the batch probe, so cross-round
-# ratio comparisons remain valid — the streaming probe only informs the
-# drift FLAGGING of streaming_* lines.
-CAL_STREAM_BATCHES = 2
-
-
-def spark_probe(spark) -> float:
-    """One timed execution of the frozen Spark calibrator plan."""
-    df = (
-        spark.range(0, CAL_SPARK_ROWS, 1, 32)
-        .selectExpr(f"id % {CAL_GROUP_MOD} AS k", "id AS v")
-        .groupBy("k")
-        .agg({"v": "sum"})
-    )
-    t0 = time.perf_counter()
-    _execute(df)
-    return time.perf_counter() - t0
-
-
-def duck_probe() -> float:
-    """One timed execution of the frozen DuckDB calibrator query — a
-    second, Spark-independent read of host CPU speed (separates
-    JVM-specific pressure such as GC/JIT from whole-host slowness)."""
-    import duckdb
-
-    con = duckdb.connect()
-    t0 = time.perf_counter()
-    con.execute(
-        f"SELECT count(*) AS c, sum(s) AS t FROM ("
-        f"SELECT range % {CAL_GROUP_MOD} AS k, sum(range::BIGINT) AS s "
-        f"FROM range({CAL_DUCK_ROWS}) GROUP BY k)"
-    ).fetchall()
-    con.close()
-    return time.perf_counter() - t0
-
-
-def streaming_probe(spark) -> float:
-    """One timed execution of the frozen streaming calibrator: a
-    2-micro-batch availableNow file-replay stream over two tiny
-    driver-written JSON files into the noop sink. The work per batch is
-    ~one row, so the measured seconds are micro-batch SCHEDULING cost —
-    the fixed overhead that dominates the sub-2 s streaming_* headline
-    lines and that the batch probe cannot normalize."""
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="bench_sprobe_")
-    try:
-        src = os.path.join(d, "src")
-        os.makedirs(src)
-        for i in range(CAL_STREAM_BATCHES):
-            with open(os.path.join(src, f"f{i}.json"), "w") as f:
-                f.write('{"v": %d}\n' % i)
-        t0 = time.perf_counter()
-        q = (
-            spark.readStream.schema("v INT")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.format("noop")
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return time.perf_counter() - t0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def _calibrate(spark, reps: int = 3) -> tuple[list[float], list[float], list[float]]:
-    """(spark_probe reps, duck_probe reps, streaming_probe reps) — one
-    untimed Spark warmup precedes the timed reps, mirroring the
-    per-query protocol. The streaming probe gets 2 reps (it is pure
-    fixed cost; its consumer is a median across start+end anyway)."""
-    _release_blocks(spark)
-    spark_probe(spark)
-    sreps = []
-    for _ in range(reps):
-        _release_blocks(spark)
-        sreps.append(spark_probe(spark))
-    dreps = [duck_probe() for _ in range(reps)]
-    streaming_probe(spark)  # warmup (first stream pays source init)
-    streps = [streaming_probe(spark) for _ in range(2)]
-    return sreps, dreps, streps
-
-
 def _release_blocks(spark) -> None:
     """Drop every persistent RDD left behind by the previous query.
 
@@ -200,300 +60,3 @@ def _release_blocks(spark) -> None:
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist(False)
     spark.sparkContext._jvm.System.gc()
-
-
-# Ratio moves on lines this small are fixed scheduling overhead flickering
-# through the 1.5x threshold (BENCH_r13 flagged ann_ivf_probe_only at a
-# "2.26x move" three other sweeps contradicted) — exempt them from
-# flagging but keep them visible in the artifact. 1.0, not 0.5: the
-# flicker band on these hosts extends to ~0.8 s raw
-# (ann_ivf_probe_only was flagged-and-adjudicated-as-noise at 0.7-0.8 s
-# raw three rounds running — VERDICT r14 #4).
-MIN_DRIFT_RAW_SEC = 1.0
-# Median reference across this many newest comparable baselines: one
-# committed sweep is a single sample of host weather.
-MAX_DRIFT_BASELINES = 3
-# streaming_* lines whose baselines predate the streaming probe get this
-# static band instead of 1.5x: micro-batch scheduling cost swung 2.7x
-# (ratio 0.59 -> 1.57) across sweeps of UNTOUCHED streaming code while
-# every batch line held (VERDICT r14 what's-wrong #1).
-STREAMING_STATIC_THRESHOLD_X = 2.75
-
-
-def _baseline_paths(here: str) -> list[str]:
-    """Comparable-baseline candidates, newest round first. Files matching
-    the glob but not the numeric round pattern (e.g. BENCH_rerun.json)
-    are SKIPPED, not an AttributeError that kills the sweep's output
-    line (ADVICE r13)."""
-    import glob
-    import re
-
-    cands = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if m:
-            cands.append((int(m.group(1)), p))
-    return [p for _, p in sorted(cands, reverse=True)]
-
-
-def _ratio_drift(queries_ratio: dict, cal_version: int,
-                 baseline_path: str | None = None,
-                 sf: float | None = None,
-                 timings: dict | None = None,
-                 sprobe_ratio: float | None = None) -> dict | None:
-    """Self-reading artifact (VERDICT r12 #6): diff this sweep's
-    per-query probe-ratios against committed BENCH_r*.json artifacts of
-    the SAME calibration version (or an explicit ``baseline_path``) and
-    flag >1.5x moves either way — the threshold the slow-host A/B test
-    pins ratios inside (a uniformly slowed host moves raw seconds >3x
-    while ratios stay within 1.3x, so a 1.5x ratio move on a
-    code-untouched line is a plan signal, not weather). De-flaked
-    (VERDICT r13 #6): the reference is the per-query MEDIAN across the
-    newest comparable baselines rather than one sweep (single-sweep
-    scheduling flicker tripped the threshold), lines under
-    ``MIN_DRIFT_RAW_SEC`` raw are exempt-but-listed, and a baseline
-    whose ratios are byte-identical to the current sweep is skipped (a
-    re-sweep after the driver records BENCH_r{N}.json would otherwise
-    silently diff against itself). Returns None when no comparable
-    baseline exists (first sweep of a calibration version)."""
-    import re
-    import statistics as _st
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    if baseline_path:
-        paths = [baseline_path]
-        max_baselines = 1
-    else:
-        paths = _baseline_paths(here)
-        max_baselines = MAX_DRIFT_BASELINES
-
-    used: list[tuple[str, dict, bool]] = []
-    for path in paths:
-        try:
-            with open(path) as f:
-                prev = json.load(f)
-        except (OSError, ValueError):
-            continue
-        # three artifact shapes: (a) bench.py's own output line; (b) the
-        # driver wrapper with a "parsed" copy of it; (c) the driver
-        # wrapper where parsing failed and only the last-2000-char
-        # "tail" survives — queries_ratio sits near the end of the
-        # output line, so it usually survives the truncation while the
-        # calibration version (near the start) does not: extract it by
-        # regex and mark the version unverified.
-        version_unverified = False
-        pq = prev.get("queries_ratio")
-        cal = prev.get("calibration", {})
-        ver = cal.get("version")
-        if pq is None and isinstance(prev.get("parsed"), dict):
-            pq = prev["parsed"].get("queries_ratio")
-            cal = prev["parsed"].get("calibration", {})
-            ver = cal.get("version")
-        if pq is None and isinstance(prev.get("tail"), str):
-            m = re.search(r'"queries_ratio":\s*(\{[^{}]*\})', prev["tail"])
-            if m:
-                try:
-                    pq = json.loads(m.group(1))
-                except ValueError:
-                    pq = None
-            cal = {}
-            for key in ("version", "spark_probe_sec", "streaming_probe_sec"):
-                mv = re.search(rf'"{key}":\s*([0-9.]+)', prev["tail"])
-                if mv:
-                    cal[key] = float(mv.group(1))
-            ver = int(cal["version"]) if "version" in cal else None
-            version_unverified = ver is None
-        if not pq or (ver is not None and ver != cal_version):
-            continue
-        # ratios normalize host speed, not data volume: a baseline taken
-        # at a different scale factor is not comparable
-        prev_sf = prev.get("sf")
-        if sf is not None and prev_sf is not None and prev_sf != sf:
-            continue
-        if not baseline_path and pq == queries_ratio:
-            continue  # this sweep's own recorded artifact — never self-diff
-        prev_sr = None
-        if cal.get("streaming_probe_sec") and cal.get("spark_probe_sec"):
-            prev_sr = cal["streaming_probe_sec"] / cal["spark_probe_sec"]
-        used.append((path, pq, version_unverified, prev_sr))
-        if len(used) >= max_baselines:
-            break
-    if not used:
-        return None
-    ref: dict[str, float] = {}
-    for n in set().union(*(set(pq) for _, pq, _, _ in used)):
-        vals = [pq[n] for _, pq, _, _ in used if pq.get(n)]
-        if vals:
-            ref[n] = _st.median(vals)
-    # streaming-line normalization (VERDICT r14 #3): the streaming probe
-    # ratio (streaming_probe_sec / spark_probe_sec) measures micro-batch
-    # scheduling cost in batch-probe units — the component of a
-    # streaming_* line that moves with host load while batch work holds.
-    # ``expected`` is the probe-ratio move between this sweep and the
-    # baseline median; a streaming line's threshold is RELAXED (never
-    # tightened) in exactly the direction the probe explains: up-moves
-    # tolerated to 1.5x x max(1, expected), down-moves to
-    # 1/(1.5 x max(1, 1/expected)). Baselines that predate the probe get
-    # the static STREAMING_STATIC_THRESHOLD_X band.
-    prev_srs = [sr for _, _, _, sr in used if sr]
-    expected = None
-    if sprobe_ratio and prev_srs:
-        expected = sprobe_ratio / _st.median(prev_srs)
-    flagged = {}
-    sub_second_exempt = []
-    for n, r in queries_ratio.items():
-        pr = ref.get(n)
-        if pr and pr > 0 and r > 0:
-            move = r / pr
-            if n.startswith("streaming_"):
-                if expected is not None:
-                    up = 1.5 * max(1.0, expected)
-                    down = 1 / (1.5 * max(1.0, 1 / expected))
-                else:
-                    up = STREAMING_STATIC_THRESHOLD_X
-                    down = 1 / STREAMING_STATIC_THRESHOLD_X
-            else:
-                up, down = 1.5, 1 / 1.5
-            if move > up or move < down:
-                if timings is not None and timings.get(n, 1.0) < MIN_DRIFT_RAW_SEC:
-                    sub_second_exempt.append(n)
-                    continue
-                entry = {
-                    "prev_ratio": round(pr, 3),
-                    "cur_ratio": r,
-                    "move_x": round(move, 2),
-                }
-                if up != 1.5:
-                    entry["threshold_x"] = round(up, 2)
-                flagged[n] = entry
-    newest_pq = used[0][1]
-    out = {
-        "baseline": os.path.basename(used[0][0]),
-        "baselines": [os.path.basename(p) for p, _, _, _ in used],
-        "threshold_x": 1.5,
-        "min_raw_sec": MIN_DRIFT_RAW_SEC,
-        "flagged": flagged,
-        "sub_second_exempt": sorted(sub_second_exempt),
-        "new_queries": sorted(n for n in queries_ratio if n not in ref),
-        "dropped_queries": sorted(n for n in newest_pq if n not in queries_ratio),
-    }
-    if expected is not None:
-        out["streaming_norm"] = {
-            "cur_probe_ratio": round(sprobe_ratio, 3),
-            "prev_probe_ratio": round(_st.median(prev_srs), 3),
-            "expected_move_x": round(expected, 2),
-        }
-    else:
-        out["streaming_static_threshold_x"] = STREAMING_STATIC_THRESHOLD_X
-    if any(vu for _, _, vu, _ in used):
-        out["baseline_cal_version_unverified"] = True
-    return out
-
-
-def main() -> None:
-    spark = get_spark(app_name="bench")
-    specs = {n: s for n, s in all_specs().items() if s.headline}
-
-    # warm the JVM + parquet footer caches outside the timed region
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    # per-query untimed warmup + MEDIAN-of-3: the first execution of a plan
-    # pays JIT/codegen/footer-cache costs that inflate even an N-rep stat by
-    # 2-3× on this host, so one throwaway run precedes the timed reps. The
-    # reported statistic is the median (not min): two rounds of recorded
-    # numbers were dominated by hypervisor noisy-neighbor drift, and a
-    # median-of-3 is robust to one outlier rep in either direction while
-    # staying comparable across rounds without forensics. The per-rep
-    # samples ride along under "samples" so a skewed host is visible in
-    # the artifact itself.
-    timings: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
-    t0_ticks = _cpu_ticks()
-    # calibrate at sweep START and END: the combined median is the
-    # normalizer; the start/end pair makes in-sweep weather shift visible
-    cal_spark_start, cal_duck_start, cal_stream_start = _calibrate(spark)
-    for name in sorted(specs):
-        _release_blocks(spark)
-        _execute(specs[name].builder(spark, SF_DIR))
-        reps: list[float] = []
-        for _ in range(3):
-            _release_blocks(spark)
-            t0 = time.perf_counter()
-            _execute(specs[name].builder(spark, SF_DIR))
-            reps.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(reps), 3)
-        samples[name] = [round(r, 3) for r in sorted(reps)]
-
-    cal_spark_end, cal_duck_end, cal_stream_end = _calibrate(spark)
-    cal = statistics.median(cal_spark_start + cal_spark_end)
-    cal_stream = statistics.median(cal_stream_start + cal_stream_end)
-    total = round(sum(timings.values()), 3)
-    queries_ratio = {n: round(t / cal, 3) for n, t in timings.items()}
-    baseline = None
-    out_path = None
-    argv = sys.argv[1:]
-    while argv:
-        if len(argv) > 1 and argv[0] == "--compare":
-            baseline = argv[1]
-            argv = argv[2:]
-        elif len(argv) > 1 and argv[0] == "--out":
-            # ALSO write the complete parsed dict to a file (VERDICT r15
-            # #7: the driver's BENCH artifact keeps only a 2000-char
-            # stdout tail, which nulled the r15 round-over-round
-            # comparison; a committed BENCH_rN_full.json survives).
-            # Additive only — the stdout one-line contract is unchanged.
-            out_path = argv[1]
-            argv = argv[2:]
-        else:  # pragma: no cover - unknown arg, ignore like before
-            argv = argv[1:]
-    payload_json = json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "stat": "median_of_3",
-                "samples": samples,
-                "calibration": {
-                    "version": CAL_VERSION,
-                    "spark_probe_sec": round(cal, 3),
-                    "spark_probe_start_sec": round(
-                        statistics.median(cal_spark_start), 3
-                    ),
-                    "spark_probe_end_sec": round(
-                        statistics.median(cal_spark_end), 3
-                    ),
-                    "duck_probe_sec": round(
-                        statistics.median(cal_duck_start + cal_duck_end), 3
-                    ),
-                    "streaming_probe_sec": round(cal_stream, 3),
-                    "spark_samples": [
-                        round(r, 3) for r in cal_spark_start + cal_spark_end
-                    ],
-                    "duck_samples": [
-                        round(r, 3) for r in cal_duck_start + cal_duck_end
-                    ],
-                    "streaming_samples": [
-                        round(r, 3) for r in cal_stream_start + cal_stream_end
-                    ],
-                },
-                "queries_ratio": queries_ratio,
-                "value_ratio": round(total / cal, 2),
-                "ratio_drift": _ratio_drift(
-                    queries_ratio, CAL_VERSION, baseline,
-                    _sf_from_dir(SF_DIR), timings,
-                    sprobe_ratio=cal_stream / cal if cal > 0 else None,
-                ),
-                "host": _host_load(t0_ticks),
-                "sf": _sf_from_dir(SF_DIR),
-            }
-    )
-    print(payload_json)
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(json.loads(payload_json), f, indent=1)
-            f.write("\n")
-
-
-if __name__ == "__main__":
-    main()

@@ -92,7 +92,7 @@ GROUP BY session_id, user_id
 """
 
 
-@register("session_metrics", oracle=_SESSION_METRICS_SQL, headline=True,
+@register("session_metrics", oracle=_SESSION_METRICS_SQL,
           tags=("A1", "A2", "A3", "A10", "sessionize"))
 def session_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session aggregate: event counts by type, revenue, duration,
@@ -158,7 +158,7 @@ def _hourly(ev: DataFrame) -> DataFrame:
     return _finish_hourly(out)
 
 
-@register("hourly_metrics", oracle=_HOURLY_SQL, headline=True,
+@register("hourly_metrics", oracle=_HOURLY_SQL,
           tags=("A4", "A2", "A3", "P6", "P7"))
 def hourly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling-window metrics — batch equivalent of reference

@@ -226,7 +226,7 @@ SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}
 """
 
 
-@register("dedup_minhash_lsh", oracle=_minhash_sql(), headline=True,
+@register("dedup_minhash_lsh", oracle=_minhash_sql(),
           tags=("dedup", "minhash", "lsh"))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands × 4 rows) near-duplicate pairs with exact
@@ -316,9 +316,9 @@ SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}
 """
 
 
-# NOT headline: this is the exact brute-force-ish baseline that
-# dedup_minhash_lsh (headline) approximates — its candidate stage is
-# Σ df² over prefix shingles, intrinsically heavier than banded LSH.
+# The exact brute-force-ish baseline that dedup_minhash_lsh approximates —
+# its candidate stage is Σ df² over prefix shingles, intrinsically heavier
+# than banded LSH.
 # Rarest-first (ascending-df) PPJoin ordering was measured here: the two
 # extra shuffles it needs (df count + per-doc reorder) cost more at this
 # scale than the ~2× candidate reduction saves (~6.5 s vs ~5.0 s at
@@ -515,7 +515,7 @@ GROUP BY source
 """
 
 
-@register("corpus_clean_pipeline", oracle=_CLEAN_PIPELINE_SQL, headline=True, tags=("dedup", "pipeline", "text"))
+@register("corpus_clean_pipeline", oracle=_CLEAN_PIPELINE_SQL, tags=("dedup", "pipeline", "text"))
 def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus cleaning in one plan: exact dedup (keep the
     min-doc_id row per normalized fingerprint, via a window over the
@@ -1676,7 +1676,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_incremental_stored", oracle=_incremental_minhash_sql(), headline=True,
+@register("dedup_incremental_stored", oracle=_incremental_minhash_sql(),
           tags=("dedup", "minhash", "lsh", "incremental", "stored-index"))
 def dedup_incremental_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-index twin of ``dedup_incremental_minhash``: build the
@@ -1695,8 +1695,7 @@ def dedup_incremental_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback layout is partition-pruned only). Per batch only |batch|
     docs are shingled and signed; the one-pass twin re-signs the whole
     corpus every run — this is the shape that amortizes at 100 TB
-    (probe-only cost tracked separately in bench.py as
-    dedup_stored_probe_only)."""
+    (the probe-only cost is dedup_stored_probe_only)."""
     index_dir, prefix = _band_store_location(sf_dir)
     sh, batch_sh, all_batch_ids = _band_store_build(spark, sf_dir, index_dir, prefix)
     return probe_band_index_tables(
@@ -1765,15 +1764,15 @@ def _band_store_build(spark, sf_dir, index_dir, prefix):
     return sh, batch_sh, all_batch_ids
 
 
-@register("dedup_stored_probe_only", oracle=_incremental_minhash_sql(), headline=True,
+@register("dedup_stored_probe_only", oracle=_incremental_minhash_sql(),
           tags=("dedup", "minhash", "lsh", "incremental", "stored-index", "bench"))
 def dedup_stored_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WARM-STORE half of ``dedup_incremental_stored``: reuse the
     persisted band index if this session already built it (build only on
     a cold start), shingle+sign NOTHING but the incoming batch, and
     probe. This is the number a production user actually pays per ingest
-    batch — the build is amortized across every batch — so it is benched
-    as its own headline line (VERDICT r7 #6). Shares the one-pass oracle:
+    batch — the build is amortized across every batch — so it is timed
+    on its own (perfbench's batch_pipeline). Shares the one-pass oracle:
     the warm-store path must still produce bit-identical verdicts.
 
     Scale shape: per batch, |batch| docs tokenized/shingled/signed ONCE

@@ -108,7 +108,7 @@ FROM r{PR_ITERS}"""
     )
 
 
-@register("pagerank_bipartite", oracle=_pagerank_sql(), headline=True, tags=("graph", "pagerank", "iterative"))
+@register("pagerank_bipartite", oracle=_pagerank_sql(), tags=("graph", "pagerank", "iterative"))
 def pagerank_bipartite(
     spark: SparkSession, sf_dir: str, bucketed_edges: bool = False
 ) -> DataFrame:

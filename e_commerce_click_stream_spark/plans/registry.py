@@ -2,9 +2,11 @@
 
 Each entry pairs a Spark builder ``(spark, sf_dir) -> DataFrame`` with an
 equivalent ANSI-SQL oracle string runnable by DuckDB over the same parquet
-fixtures (tables pre-registered as views). The driver's correctness gate
-(/root/repo/__spark_entry__.py contract) compares the two at sf=0.01 by
-row count + schema + order-insensitive value hash, so:
+fixtures (tables pre-registered as views). Registration order (the
+``_PLAN_MODULES`` order, then decorator order within each module) is the
+order of ``all_specs()`` and hence of ``__spark_entry__.queries()``. The
+correctness gate of the ``__spark_entry__.py`` contract compares the two
+at sf=0.01 by row count + schema + order-insensitive value hash, so:
 
 - every computed column is aliased identically on both sides;
 - floating-point aggregates are rounded on both sides (summation order
@@ -48,115 +50,12 @@ _PLAN_MODULES = (
     "e_commerce_click_stream_spark.plans.governance",
 )
 
-# The external correctness gate verifies a bounded prefix (~50) of queries()
-# in dict-insertion order. Emit these names FIRST so every query that is new,
-# changed this round, or lacked a CORRECTNESS row last round lands inside the
-# verified window; previously-proven queries follow in registration order.
-# Maintain per round: new/changed queries go at the top.
-_VERIFY_FIRST: tuple[str, ...] = (
-    # r16 window (VERDICT r15 #1): LEADS with the 9 queries whose
-    # BEHAVIOR changed in r15 session 2 AFTER the hedge commit (CC
-    # fixpoint fusion, activity-similarity norm hoist, ordered-replay
-    # partitions) — their only current proofs are builder-run; then the
-    # parse-once-touched headliners that rotated out of the r15 window;
-    # then the standing r10-proof rotation overflow (_VERIFY_NEXT's
-    # head last round). Rule adopted per VERDICT r15 #1: any
-    # behavior-touching commit made after a hedge re-hedges its queries
-    # into this list IN THE SAME COMMIT.
-    # -- r15 session-2 behavior-changed (fused CC convergence check,
-    #    user-norm hoist, arrival-order replay partitions)
-    "dedup_connected_components",
-    "dedup_cc_incremental",
-    "dedup_cc_stored",
-    "dedup_cc_stored_erase",
-    "dedup_cc_stored_compact",
-    "dedup_quality_keep",
-    "dedup_savings_report",
-    "user_activity_similarity",
-    "streaming_late_data_audit",
-    # -- parse-once-touched headliners that sat outside the r15 window
-    #    (plans byte-identical by audit; this is the fixture-current
-    #    driver re-proof VERDICT r15 #1 prescribes)
-    "corpus_clean_pipeline",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "brand_revenue",
-    "session_metrics",
-    "hourly_metrics",
-    "ann_cosine_topk",
-    "doc_exact_substring_rewrite",
-    # -- CHANGED r16 (store-write overlap + bucket alignment, guide
-    #    §2.6/§6): build_postings_index / append_to_postings_index /
-    #    erase_from_postings_index / apply_erasures and _ivf_store_build
-    #    now bucket-align their keyed writes and run the independent
-    #    table jobs concurrently — one representative per changed path
-    #    hedges in; the remaining store twins verify through the
-    #    builder-run full-family driver_sim (17/17 green at sf0.01)
-    "bm25_stored_probe_only",
-    "bm25_stored_append",
-    "bm25_stored_erase",
-    "bm25_stored_apply_erase",
-    "ann_ivf_stored",
-    # -- CHANGED r16: the DSIR corpus totals ride a window over the
-    #    bounded bucket-stats relation instead of a checkpointed agg +
-    #    crossJoined broadcast (value-identical BIGINT sums; one fewer
-    #    checkpoint job) — re-hedged in the same commit per the r16 rule
-    "corpus_curation_run",
-    # -- standing rotation: the oldest-proof queries (the six r10 slots
-    #    the r15 window displaced, then _VERIFY_NEXT's r10 head in its
-    #    existing order); the remainder leads _VERIFY_NEXT for r17
-    "brand_basket_affinity",
-    "corpus_mix_plan",
-    "corpus_vocabulary",
-    "customer_ltv_cohorts",
-    "customer_pareto_abc",
-    "daily_active_users",
-    "ann_ivf_pq_topk",
-    "ann_recall_eval",
-    "dedup_simhash_hamming",
-    "doc_gram_contamination",
-    "doc_winnowing_fingerprints",
-    "dq_constraint_report",
-    "embedding_cluster_quality",
-    "embedding_pq_encode",
-    "embedding_sq8_error",
-    "event_type_markov",
-    "events_anomaly_zscore",
-    "events_rollup_hypertable",
-    "events_sliding_windows",
-    "funnel_conversion",
-    "hourly_gapfill_locf",
-    "hybrid_rrf_fusion",
-    "key_skew_profile",
-)
-
-
-_VERIFY_NEXT: tuple[str, ...] = (
-    # the r10-proof queries the r16 window could not fit — they lead
-    # the r17 refresh (the three names the r16 store-write hedges
-    # displaced first, then the standing order)
-    "multimodal_phash_neardup",
-    "multimodal_shard_pack",
-    "nation_coverage_full_outer",
-    "orders_backlog_over_time",
-    "session_cart_contents",
-    "sql_gateway_hourly_revenue",
-    "streaming_exactly_once_dedup",
-    "streaming_session_windows",
-    "streaming_sliding_windows",
-    "user_entropy_profile",
-    "user_retention_cohorts",
-    "watermark_delay_calibration",
-)
-
 
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
     builder: Builder
     oracle: str | None  # None => driver records rows-only check
-    headline: bool = False  # included in bench.py timings
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
 
@@ -167,7 +66,6 @@ _REGISTRY: dict[str, QuerySpec] = {}
 def register(
     name: str,
     oracle: str | None = None,
-    headline: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[Builder], Builder]:
     def deco(fn: Builder) -> Builder:
@@ -177,7 +75,6 @@ def register(
             name=name,
             builder=fn,
             oracle=oracle,
-            headline=headline,
             tags=tuple(tags),
             doc=(fn.__doc__ or "").strip(),
         )
@@ -187,48 +84,8 @@ def register(
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Import every plan module (registration is an import side effect).
-
-    Returns specs with ``_VERIFY_FIRST`` names leading (driver verification
-    window), then the remainder in registration order.
-    """
-    any_module_skipped = False
+    """Import every plan module (registration is an import side effect) and
+    return the specs in registration order."""
     for mod in _PLAN_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            if exc.name != mod:  # genuine missing dependency inside the module
-                raise
-            any_module_skipped = True
-    # Rotation lists are maintained by hand (~90 literal edits per round) —
-    # a typo'd name must fail LOUDLY here, not silently forfeit its verify
-    # slot (ADVICE r10). The strictness only applies when the registry is
-    # complete: a tolerated-missing plan module (the swallow above) takes
-    # its registrations with it, and flagging those names would make the
-    # tolerance unreachable.
-    if not any_module_skipped:
-        unknown = (set(_VERIFY_FIRST) | set(_VERIFY_NEXT)) - set(_REGISTRY)
-        if unknown:
-            raise ValueError(
-                f"rotation lists name unregistered queries: {sorted(unknown)}"
-            )
-    overlap = set(_VERIFY_FIRST) & set(_VERIFY_NEXT)
-    if overlap:
-        raise ValueError(f"queries in BOTH rotation lists: {sorted(overlap)}")
-    for lst, label in ((_VERIFY_FIRST, "_VERIFY_FIRST"), (_VERIFY_NEXT, "_VERIFY_NEXT")):
-        if len(lst) != len(set(lst)):
-            dupes = sorted({n for n in lst if lst.count(n) > 1})
-            raise ValueError(f"duplicate names in {label}: {dupes}")
-    if any_module_skipped:
-        # tolerated-missing plan module: its registrations are absent, so
-        # rotation names it owned must be skipped, not KeyError (the
-        # degradation path the strictness guard above deliberately spares)
-        ordered = {n: _REGISTRY[n] for n in _VERIFY_FIRST if n in _REGISTRY}
-        ordered.update(
-            (n, _REGISTRY[n]) for n in _VERIFY_NEXT if n in _REGISTRY
-        )
-    else:
-        ordered = {n: _REGISTRY[n] for n in _VERIFY_FIRST}
-        ordered.update((n, _REGISTRY[n]) for n in _VERIFY_NEXT)
-    ordered.update((n, s) for n, s in _REGISTRY.items() if n not in ordered)
-    return ordered
+        importlib.import_module(mod)
+    return dict(_REGISTRY)

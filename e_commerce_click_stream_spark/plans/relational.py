@@ -109,7 +109,7 @@ def money_term_sql() -> dict[str, str]:
     }
 
 
-@register("q1_pricing_summary", oracle=_Q1_SQL, headline=True, tags=("agg", "scan"))
+@register("q1_pricing_summary", oracle=_Q1_SQL, tags=("agg", "scan"))
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped scan+agg: the filter pushes to the parquet scan and
     the aggregate runs partial+final with whole-stage codegen."""
@@ -151,7 +151,7 @@ LIMIT 10
 """
 
 
-@register("q3_shipping_priority", oracle=_Q3_SQL, headline=True, tags=("join", "topk"))
+@register("q3_shipping_priority", oracle=_Q3_SQL, tags=("join", "topk"))
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way join (broadcast customer dim) + agg + deterministic top-10.
     The capability the reference's star schema implies but never implements
@@ -203,7 +203,7 @@ GROUP BY n_name
 """
 
 
-@register("q5_local_supplier_volume", oracle=_Q5_SQL, headline=True, tags=("join",))
+@register("q5_local_supplier_volume", oracle=_Q5_SQL, tags=("join",))
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """6-way join: fact lineitem joins broadcast dims; only orders (the
     second-largest table) flows through a shuffle join on o_orderkey."""
@@ -259,7 +259,7 @@ GROUP BY p_brand
 """
 
 
-@register("brand_revenue", oracle=_BRAND_SQL, headline=True, tags=("join", "agg"))
+@register("brand_revenue", oracle=_BRAND_SQL, tags=("join", "agg"))
 def brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-dim broadcast join + keyed agg; lineitem never shuffles for
     the join (only for the final small groupBy). Money math is exact
@@ -2085,7 +2085,7 @@ LIMIT 10
 """
 
 
-@register("q21_waiting_suppliers", oracle=_Q21_SQL, headline=True, tags=("window", "agg", "topk"))
+@register("q21_waiting_suppliers", oracle=_Q21_SQL, tags=("window", "agg", "topk"))
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: NATION_6 suppliers who were the sole late shipper
     (>60 days after order date — no receipt/commit dates in the fixtures)

@@ -203,7 +203,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
 """
 
 
-@register("ann_cosine_topk", oracle=_TOPK_SQL, headline=True, tags=("similarity", "topk"))
+@register("ann_cosine_topk", oracle=_TOPK_SQL, tags=("similarity", "topk"))
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the query vectors (vec_id < 10):
     broadcast the queries against the corpus, rank by rounded cosine with a
@@ -438,7 +438,7 @@ FROM scored WHERE cosine >= {NEARDUP_COSINE}
 """
 
 
-@register("embedding_neardup_lsh", oracle=_NEARDUP_LSH_SQL, headline=True, tags=("similarity", "near-dup", "lsh"))
+@register("embedding_neardup_lsh", oracle=_NEARDUP_LSH_SQL, tags=("similarity", "near-dup", "lsh"))
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus embedding near-dup pairs, banded sign-LSH:
     4 bands x band_bits over the size-derived signature (band_bits from
@@ -712,7 +712,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
 _IVF_TOPK_SQL = _ivf_topk_sql()
 
 
-@register("ann_ivf_topk", oracle=_IVF_TOPK_SQL, headline=True, tags=("similarity", "ivf", "topk"))
+@register("ann_ivf_topk", oracle=_IVF_TOPK_SQL, tags=("similarity", "ivf", "topk"))
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end IVF-flat ANN search. Corpus vectors are assigned to their
     nearest of 8 deterministic centroids (one broadcast join + argmax);
@@ -827,7 +827,7 @@ GROUP BY a.cell
     return "WITH " + ",\n".join(parts) + final
 
 
-@register("embedding_kmeans_iter", oracle=_kmeans_sql(), headline=True, tags=("similarity", "kmeans", "iterative"))
+@register("embedding_kmeans_iter", oracle=_kmeans_sql(), tags=("similarity", "kmeans", "iterative"))
 def embedding_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three Lloyd's iterations of k-means (k=8, seeded from the first 8
     corpus vectors) — training the coarse codebook the ann_ivf_* queries
@@ -1584,7 +1584,7 @@ def _gram_partials(batches):
     )
 
 
-@register("embedding_covariance", oracle=_COV_SQL, headline=True,
+@register("embedding_covariance", oracle=_COV_SQL,
           tags=("similarity", "features", "pca"))
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle covariance + correlation matrix over the embedding
@@ -2376,14 +2376,14 @@ def _ivf_probe_stored(
     )
 
 
-@register("ann_ivf_probe_only", oracle=_IVF_TOPK_SQL, headline=True,
+@register("ann_ivf_probe_only", oracle=_IVF_TOPK_SQL,
           tags=("similarity", "ivf", "topk", "stored-index", "bench"))
 def ann_ivf_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WARM-STORE half of ``ann_ivf_stored`` (mirroring
     ``dedup_stored_probe_only``, VERDICT r8 #6): reuse the persisted IVF
     catalog tables if this session already built them (build only on a
     cold start) and time just the probe — the marginal per-query cost a
-    100 TB vector store is judged by, benched as its own headline line.
+    100 TB vector store is judged by.
     Shares the one-pass oracle: the warm path must return bit-identical
     top-k.
 

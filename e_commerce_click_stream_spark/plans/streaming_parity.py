@@ -51,7 +51,7 @@ GROUP BY 1
 """
 
 
-@register("streaming_hourly_metrics", oracle=_STREAM_HOURLY_SQL, headline=True, tags=("T1", "T2", "T4", "T5", "streaming"))
+@register("streaming_hourly_metrics", oracle=_STREAM_HOURLY_SQL, tags=("T1", "T2", "T4", "T5", "streaming"))
 def streaming_hourly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window hourly metrics executed as a real
     streaming query (complete mode → all windows at end of replay equal the

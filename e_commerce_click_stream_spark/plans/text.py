@@ -49,7 +49,7 @@ FROM toks
 """
 
 
-@register("doc_quality_scores", oracle=_QUALITY_SQL, headline=True, tags=("text", "quality"))
+@register("doc_quality_scores", oracle=_QUALITY_SQL, tags=("text", "quality"))
 def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features: token counts, uniqueness ratio, mean
     token length, English stopword ratio, and a boolean quality gate —
@@ -883,7 +883,7 @@ WHERE rk <= {TFIDF_TOP}
 """
 
 
-@register("tfidf_top_terms", oracle=_TFIDF_SQL, headline=True, tags=("text", "tfidf", "topk"))
+@register("tfidf_top_terms", oracle=_TFIDF_SQL, tags=("text", "tfidf", "topk"))
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (ties broken by token): term
     frequency per (doc, token), document frequency per token, idf =
@@ -1614,7 +1614,7 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("doc_exact_substring_rewrite", oracle=_SUBSTRING_REWRITE_SQL,
-          headline=True, tags=("text", "dedup", "substring", "rewrite"))
+          tags=("text", "dedup", "substring", "rewrite"))
 def doc_exact_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-redacted rewrite (same rewrite shape as ``doc_passage_dedup``):
     drop every token inside a corpus-repeated span and reassemble the
@@ -4034,7 +4034,7 @@ def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("bm25_topk_retrieval", oracle=_BM25_TOPK_SQL, headline=True,
+@register("bm25_topk_retrieval", oracle=_BM25_TOPK_SQL,
           tags=("text", "retrieval", "bm25", "topk"))
 def bm25_topk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 lexical retrieval (k1=1.2, b=0.75): the query set is
@@ -4684,7 +4684,7 @@ def _bm25_probe(spark: SparkSession, prefix: str) -> DataFrame:
     )
 
 
-@register("bm25_stored_probe_only", oracle=_BM25_TOPK_SQL, headline=True,
+@register("bm25_stored_probe_only", oracle=_BM25_TOPK_SQL,
           tags=("text", "retrieval", "bm25", "stored-index", "bench"))
 def bm25_stored_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARM-STORE BM25 retrieval: reuse the persisted postings index if
@@ -5620,7 +5620,7 @@ FROM packed
 """
 
 
-@register("corpus_curation_run", oracle=_CURATION_SQL, headline=True,
+@register("corpus_curation_run", oracle=_CURATION_SQL,
           tags=("text", "pipeline", "curation", "readout"))
 def corpus_curation_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed curation pipeline readout: per-stage surviving document

@@ -13,6 +13,13 @@ from tests.conftest import SF_SMOKE
 SPECS = all_specs()
 
 
+def test_only_the_declared_sketch_lacks_an_oracle():
+    # No query is registered without proof: every spec but the HLL sketch
+    # (README "Correctness model") carries an oracle that the parity test
+    # below checks on every run.
+    assert {n for n, s in SPECS.items() if s.oracle is None} == {"hourly_metrics_approx"}
+
+
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_runs(spark, name):
     df = SPECS[name].builder(spark, SF_SMOKE)

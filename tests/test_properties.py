@@ -81,7 +81,7 @@ _history_strategy = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(_history_strategy)
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_scd2_collapse_matches_run_length_encoding(spark, raw):
     import os
     import tempfile

@@ -296,7 +296,7 @@ _uni_corpus = st.lists(
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(_uni_corpus)
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_unigram_matches_reference_on_random_corpora(spark, texts):
     _check_unigram(spark, texts)
 
@@ -388,7 +388,7 @@ _bm25_corpus = st.lists(
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(_bm25_corpus)
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_bm25_matches_reference_on_random_corpora(spark, texts):
     rows = [(i, t) for i, t in enumerate(texts)]
     sf = _write_docs(spark, rows)

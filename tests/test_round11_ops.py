@@ -250,7 +250,7 @@ _uni2_corpus = st.lists(
 @settings(max_examples=4, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(_uni2_corpus)
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_unigram_round2_matches_reference_on_random_corpora(spark, texts):
     _check_unigram_round2(spark, texts)
 

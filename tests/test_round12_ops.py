@@ -1154,7 +1154,7 @@ def test_mix_manifest_matches_python_reference(spark):
         assert 0 <= full <= MAX_REPEAT_EPOCHS
 
 
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_cc_incremental_merge_equals_from_scratch(spark):
     """Randomized-graph equivalence for the incremental CC merge: for
     several seeded random splits of a random edge set into OLD and NEW,

@@ -169,7 +169,7 @@ def test_cc_stored_matches_from_scratch_idempotent_and_on_disk(spark):
     assert from_disk == r1, "label state not fully materialized on disk"
 
 
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_cc_erase_relabel_splits_and_renumbers(spark):
     """The property deletion vectors cannot express (the reason the CC
     store's erasure re-clusters): erasing a bridge node SPLITS its
@@ -383,9 +383,8 @@ def test_band_apply_noop_without_deletion_vector(spark):
     reason="scale probe is a ~6 min opt-in sweep: SPARK_GRAFT_SCALE_PROBE=1",
 )
 def test_headline_queries_survive_3x_scale(spark):
-    """VERDICT r12 #5 as a committed runnable (the committed artifact is
-    SCALEPROBE_r13.json): build the 3x re-keyed concatenation of sf0.1
-    and run a representative headline slice builder-vs-oracle at
+    """The scale probe as a committed runnable: build the 3x re-keyed
+    concatenation of sf0.1 and run a representative slice builder-vs-oracle at
     ~sf0.3-equivalent — catching constants-that-should-be-functions
     before the driver regenerates bigger fixtures."""
     import subprocess
@@ -492,8 +491,8 @@ def test_streaming_curation_diverges_from_oneshot_and_matches_oracle(spark):
 
 
 def test_scale_probe_builder_keeps_joins_consistent():
-    """scripts/scale_probe.py is load-bearing (both committed SCALEPROBE
-    artifacts ride on it): a K-copy fixture must scale every fact table
+    """scripts/scale_probe.py is load-bearing (the 3x scale test above
+    rides on it): a K-copy fixture must scale every fact table
     by exactly K, keep dims single-copy, and — the part that silently
     breaks if two columns of one key domain get different offsets —
     preserve join cardinality: lineitem⋈orders and lineitem⋈part must

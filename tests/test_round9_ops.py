@@ -172,7 +172,7 @@ def _brute_force(docs):
 
 @settings(**_SETTINGS)
 @given(_corpora())
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_anchor_coverage_equals_brute_force(spark, corpora):
     import os
     import tempfile

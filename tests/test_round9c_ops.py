@@ -399,7 +399,7 @@ _bpe_corpus = st.lists(
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(_bpe_corpus)
-@pytest.mark.slow  # randomized-reference sweep: round-close full-suite tier
+@pytest.mark.slow  # randomized-reference sweep: opt out with -m "not slow"
 def test_bpe_trainer_matches_reference_on_random_corpora(spark, texts):
     rows = [(i + 1, t, "en", "s") for i, t in enumerate(texts)]
     sf = _write_docs(spark, rows)

@@ -101,7 +101,8 @@ def test_tables_ddl_and_seed(spark, tmp_path):
 
 def test_processing_time_trigger_matches_available_now(spark):
     """T5: the same finite replay under a processingTime trigger converges
-    to the identical final state as Trigger.AvailableNow."""
+    to the identical final state as Trigger.AvailableNow, also when the
+    trigger interval (2 s) is longer than the runner's quiescence window."""
     from e_commerce_click_stream_spark.streaming.jobs import (
         hourly_metrics_stream,
         read_events_stream,
@@ -109,16 +110,16 @@ def test_processing_time_trigger_matches_available_now(spark):
         run_with_processing_time,
     )
 
-    pt = run_with_processing_time(
-        hourly_metrics_stream(read_events_stream(spark, SF_SMOKE)), "complete"
-    )
+    cols = ["hour_timestamp", "total_events", "page_views", "purchases", "revenue"]
     an = run_to_completion(
         hourly_metrics_stream(read_events_stream(spark, SF_SMOKE)), "complete"
     )
-    cols = ["hour_timestamp", "total_events", "page_views", "purchases", "revenue"]
-    assert sorted(map(tuple, pt.select(cols).collect())) == sorted(
-        map(tuple, an.select(cols).collect())
-    )
+    expected = sorted(map(tuple, an.select(cols).collect()))
+    for interval in ("500 milliseconds", "2 seconds"):
+        pt = run_with_processing_time(
+            hourly_metrics_stream(read_events_stream(spark, SF_SMOKE)), "complete", interval
+        )
+        assert sorted(map(tuple, pt.select(cols).collect())) == expected, interval
 
 
 def test_initial_watermark_drops_pre_epoch_rows(spark, tmp_path):
