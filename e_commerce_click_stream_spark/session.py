@@ -18,6 +18,28 @@ fixed per-trigger cost is what sets the freshness of the live tables
 coalescing resizes their shuffles at runtime. A checkpoint keeps the
 partition count it was created with, so a restart over an older
 checkpoint runs at its original count.
+
+Why stream checkpoints go through
+``FileSystemBasedCheckpointFileManager``: the bundled Hadoop runs without
+its native libhadoop, so on the local file system every link-status lookup
+(``getFileLinkStatus``) forks a ``readlink`` process and every permission
+set forks a ``chmod``. Spark's default
+``FileContextBasedCheckpointFileManager`` renames through
+``AbstractFileSystem.renameInternal``, which makes several link lookups
+per rename, for the file and for its ``.crc`` sidecar. Every offset,
+commit, source-log, sink-metadata and state-store write ends in such a
+rename, so these forks dominated each trigger's checkpoint commits:
+thousands of ``readlink`` forks per 16 s perfbench ingest_live run on a
+4-vCPU host, against a handful with ``FileSystem.rename``, which looks up
+no links. On the local file system the two managers are equivalent:
+``LocalFileSystem`` is a ``ChecksumFileSystem``, so the ``.crc`` sidecars
+and their verification stay; file permissions and Spark's own state-file
+checksums stay; and the "destination exists" guard behaves the same,
+because Hadoop's local ``renameInternal`` handles overwrite
+non-atomically, so both managers check and then rename. A deployment that
+keeps its checkpoints on HDFS, where FileContext renames with overwrite
+atomically, sets the class back to the FileContext one through
+``get_spark``'s ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -92,6 +114,12 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         # At 100 TB the scan parallelism is governed by this: 128 MB splits.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # -- streaming checkpoints (see the module docstring) ---------------
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

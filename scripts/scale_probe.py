@@ -1,7 +1,7 @@
 """Build a K-times re-keyed concatenation of an existing fixture and run
-the headline queries through the driver gate at that scale (VERDICT r12
-#5: every scale claim to date was proven at sf0.1; this probes one notch
-past it so constants-that-should-be-functions — bucket counts,
+the named queries through the driver gate at that scale (scale claims
+are proven at sf0.1; this probes one notch past it so
+constants-that-should-be-functions — bucket counts,
 band bits, broadcast-threshold crossovers — surface locally before the
 driver ever regenerates bigger fixtures).
 
@@ -16,7 +16,7 @@ engines see the same data so the oracle comparison is unaffected.
 
 Usage:
     python scripts/scale_probe.py [K] [src_dir] [out_dir]
-    python scripts/driver_sim.py <out_dir> <headline names...>
+    python scripts/driver_sim.py <out_dir> <query names...>
 Defaults: K=3, src=/root/testdata/sf0.1, out=/tmp/spark_graft_scale_x{K}.
 """
 

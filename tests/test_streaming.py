@@ -187,70 +187,62 @@ def test_replay_parts_falls_back_to_session_parallelism(spark):
             spark.conf.set(_REPLAY_PARTS_KEY, prev)
 
 
-def test_hourly_restart_over_16_partition_checkpoint(spark, tmp_path):
-    """A checkpoint keeps the state-partition count it was created with.
-    Start the hourly query at 16 shuffle partitions, restart it over the
-    same checkpoint at the core-count default, and check the state carried
-    across (one window spans both runs) still yields exact closed
-    windows."""
-    import duckdb
+_HOURLY_SCHEMA = "ts timestamp, user_id bigint, event_type string, value double"
+_HOURLY_COLS = [
+    "hour_timestamp", "total_events", "page_views", "cart_additions", "purchases", "revenue"
+]
+
+
+def _land_events(src, name, start, n):
+    """One event every 5 minutes from `start`, naive UTC micros like the
+    fixtures."""
     import pandas as pd
 
-    from e_commerce_click_stream_spark.session import _cpus
+    kinds = ["view", "click", "view", "purchase"]
+    ts = pd.date_range(start, periods=n, freq="5min").astype("datetime64[us]")
+    pd.DataFrame(
+        {
+            "ts": ts,
+            "user_id": [i % 7 for i in range(n)],
+            "event_type": [kinds[i % 4] for i in range(n)],
+            "value": [round(1.25 * i, 2) for i in range(n)],
+        }
+    ).to_parquet(os.path.join(src, name), index=False)
+
+
+def _run_hourly(spark, src, out, ckpt, conf):
+    """Run the hourly query over `src` to completion with `conf` set for
+    this query only (the query clones the session conf when it starts),
+    and return its progress."""
     from e_commerce_click_stream_spark.streaming.jobs import hourly_metrics_stream
 
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    os.makedirs(src)
-    kinds = ["view", "click", "view", "purchase"]
-
-    def land(name, start, n):
-        # one event every 5 minutes from `start`; naive UTC micros like the
-        # fixtures
-        ts = pd.date_range(start, periods=n, freq="5min").astype("datetime64[us]")
-        pd.DataFrame(
-            {
-                "ts": ts,
-                "user_id": [i % 7 for i in range(n)],
-                "event_type": [kinds[i % 4] for i in range(n)],
-                "value": [round(1.25 * i, 2) for i in range(n)],
-            }
-        ).to_parquet(os.path.join(src, name), index=False)
-
-    def run(parts):
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        q = (
+            hourly_metrics_stream(spark.readStream.schema(_HOURLY_SCHEMA).parquet(src))
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         try:
-            events = spark.readStream.schema(
-                "ts timestamp, user_id bigint, event_type string, value double"
-            ).parquet(src)
-            q = (
-                hourly_metrics_stream(events)
-                .writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                assert q.awaitTermination(120), "replay did not finish in 120s"
-            finally:
-                q.stop()
-            return q.recentProgress
+            assert q.awaitTermination(120), "replay did not finish in 120s"
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            q.stop()
+        return q.recentProgress
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
-    land("a.parquet", "2024-01-01 00:05", 18)  # 00:05 .. 01:30
-    run("16")
-    land("b.parquet", "2024-01-01 01:40", 40)  # 01:40 .. 04:55, hour 01 spans both
-    progress = run(str(_cpus()))
 
-    parts = {op["numShufflePartitions"] for p in progress for op in p["stateOperators"]}
-    assert parts == {16}
-    cols = ["hour_timestamp", "total_events", "page_views", "cart_additions", "purchases", "revenue"]
-    got = sorted(tuple(r) for r in spark.read.parquet(out).select(cols).collect())
-    # the final watermark (04:55 - 10 min) has closed every hour before 04:00
-    want = duckdb.sql(
+def _duckdb_closed_hours(src, before):
+    import duckdb
+
+    return duckdb.sql(
         f"""
         SELECT date_trunc('hour', ts), count(*),
                sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END),
@@ -258,9 +250,84 @@ def test_hourly_restart_over_16_partition_checkpoint(spark, tmp_path):
                sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END),
                round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0 END), 2)
         FROM '{src}/*.parquet'
-        WHERE ts < TIMESTAMP '2024-01-01 04:00:00'
+        WHERE ts < TIMESTAMP '{before}'
         GROUP BY 1 ORDER BY 1
         """
     ).fetchall()
+
+
+def test_hourly_restart_over_16_partition_checkpoint(spark, tmp_path):
+    """A checkpoint keeps the state-partition count it was created with.
+    Start the hourly query at 16 shuffle partitions, restart it over the
+    same checkpoint at the core-count default, and check the state carried
+    across (one window spans both runs) still yields exact closed
+    windows."""
+    from e_commerce_click_stream_spark.session import _cpus
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    parts = "spark.sql.shuffle.partitions"
+    _land_events(src, "a.parquet", "2024-01-01 00:05", 18)  # 00:05 .. 01:30
+    _run_hourly(spark, src, out, ckpt, {parts: "16"})
+    _land_events(src, "b.parquet", "2024-01-01 01:40", 40)  # 01:40 .. 04:55, hour 01 spans both
+    progress = _run_hourly(spark, src, out, ckpt, {parts: str(_cpus())})
+
+    assert {op["numShufflePartitions"] for p in progress for op in p["stateOperators"]} == {16}
+    got = sorted(tuple(r) for r in spark.read.parquet(out).select(_HOURLY_COLS).collect())
+    # the final watermark (04:55 - 10 min) has closed every hour before 04:00
+    want = _duckdb_closed_hours(src, "2024-01-01 04:00:00")
     assert [r[0] for r in got] == [r[0] for r in want]
     assert got == [tuple(r) for r in want]
+
+
+def test_hourly_restart_over_file_context_checkpoint(spark, tmp_path):
+    """Streaming smoke test at get_spark's core-count partition default. A
+    checkpoint written through Spark's default FileContext manager
+    restarts on the session's FileSystem manager: the state carried across
+    (hour 01 spans both runs) yields exact closed windows, each once."""
+    from e_commerce_click_stream_spark.session import _cpus
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    package = "org.apache.spark.sql.execution.streaming.checkpointing."
+    old = package + "FileContextBasedCheckpointFileManager"
+    cores = {"spark.sql.shuffle.partitions": str(_cpus())}
+    _land_events(src, "a.parquet", "2024-01-01 00:05", 18)  # 00:05 .. 01:30
+    _run_hourly(spark, src, out, ckpt, {**cores, manager: old})
+    assert spark.conf.get(manager) == package + "FileSystemBasedCheckpointFileManager"
+    _land_events(src, "b.parquet", "2024-01-01 01:40", 40)  # 01:40 .. 04:55
+    progress = _run_hourly(spark, src, out, ckpt, cores)
+
+    assert {op["numShufflePartitions"] for p in progress for op in p["stateOperators"]} == {
+        _cpus()
+    }
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    got = sorted(tuple(r) for r in spark.read.parquet(out).select(_HOURLY_COLS).collect())
+    hours = [r[0] for r in got]
+    assert len(hours) == len(set(hours)), "an hour was emitted twice"
+    assert got == [tuple(r) for r in _duckdb_closed_hours(src, "2024-01-01 04:00:00")]
+
+
+def test_checkpoint_keeps_hadoop_and_state_checksums(spark, tmp_path):
+    """The FileSystem checkpoint manager writes through Hadoop's
+    ChecksumFileSystem, so every log entry and state delta keeps its
+    hidden `.<name>.crc` sidecar, and Spark's own state-file checksums
+    (`<version>.delta.crc`) are still written."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    _land_events(src, "a.parquet", "2024-01-01 00:05", 18)
+    _run_hourly(spark, src, out, ckpt, {})
+
+    def names(sub):
+        return {f for _, _, fs in os.walk(os.path.join(ckpt, sub)) for f in fs}
+
+    for log in ("offsets", "commits"):
+        entries = {f for f in names(log) if f.isdigit()}
+        assert entries, log
+        assert {f".{f}.crc" for f in entries} <= names(log), log
+    state = names("state")
+    deltas = {f for f in state if f.endswith(".delta")}
+    assert deltas
+    assert {f".{f}.crc" for f in deltas} <= state
+    assert {f"{f}.crc" for f in deltas} <= state
